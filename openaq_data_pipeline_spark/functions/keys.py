@@ -51,13 +51,3 @@ def surrogate_key(*cols: Column | str, dtypes: list[T.DataType] | None = None) -
         dtype = dtypes[i] if dtypes else None
         parts.append(F.coalesce(_canonical_str(col, dtype), F.lit(NULL_SENTINEL)))
     return F.md5(F.concat_ws("-", *parts))
-
-
-def surrogate_key_sql(*exprs: str) -> str:
-    """ANSI-SQL rendering of the same key (for oracles / SQL surface).
-
-    Each expr must already be a string-typed SQL expression rendered
-    in the canonical formats above.
-    """
-    coalesced = ", ".join(f"coalesce({e}, '{NULL_SENTINEL}')" for e in exprs)
-    return f"md5(concat_ws('-', {coalesced}))"

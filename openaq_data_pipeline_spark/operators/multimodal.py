@@ -2475,14 +2475,6 @@ class _JpegBitWriter:
         return bytes(self.buf)
 
 
-def _magnitude(v: int) -> tuple[int, int]:
-    """DPCM/AC magnitude coding: (category, value-bits)."""
-    if v == 0:
-        return 0, 0
-    s = int(abs(v)).bit_length()
-    return s, (v if v >= 0 else v + (1 << s) - 1)
-
-
 def _encode_plane_blocks(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
     """(nby, nbx, 8, 8) quantized zigzag-ready coefficients."""
     h, w = plane.shape

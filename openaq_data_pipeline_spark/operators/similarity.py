@@ -1875,13 +1875,6 @@ def semantic_dedup(
 #   order-free, hash-exact against a SQL oracle.
 
 
-def _sub_slices(vec_col, m: int, dsub: int):
-    v = F.transform(vec_col, lambda x: x.cast("double"))
-    return [
-        F.slice(v, s * dsub + 1, dsub).alias(f"__sub{s}") for s in range(m)
-    ]
-
-
 def _expl_subvectors(
     df: DataFrame, id_col: str, vec_col: str, m: int, dsub: int
 ) -> DataFrame:

@@ -110,38 +110,6 @@ def transform(spark: SparkSession, paths: PipelinePaths) -> dict[str, DataFrame]
     }
 
 
-def materialize_marts(
-    spark: SparkSession,
-    paths: PipelinePaths,
-    full_refresh: bool = False,
-) -> dict[str, DataFrame]:
-    """Incremental (MERGE) materialization of both gold marts — the
-    reference's ``materialized='incremental', unique_key=…`` contract
-    (S12/P7). Each run recomputes only measurements at/after the
-    target's high watermark and MERGEs on the record key; day
-    partitions outside the lookback are never rewritten."""
-    from openaq_data_pipeline_spark.incremental import (
-        AIR_QUALITY_TABLE_SPEC,
-        WEATHER_TABLE_SPEC,
-        IncrementalTable,
-        incremental_mart,
-    )
-
-    models = transform(spark, paths)
-    valid = models["int_valid_measurements"]
-    enriched = models["int_sensors_enriched"]
-    out = {}
-    for name, fn, spec in (
-        ("mart_location_air_quality", mart_location_air_quality, AIR_QUALITY_TABLE_SPEC),
-        ("mart_location_weather", mart_location_weather, WEATHER_TABLE_SPEC),
-    ):
-        table = IncrementalTable(path=os.path.join(paths.root, "gold", name), **spec)
-        out[name] = incremental_mart(
-            spark, fn, valid, enriched, table, full_refresh=full_refresh
-        )
-    return out
-
-
 def build(
     spark: SparkSession,
     paths: PipelinePaths,

@@ -2218,7 +2218,7 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (incremental.merge_upsert), and return the materialized table —
     bit-identical to the batch aggregation because update mode plus a
     full drain loses nothing to the watermark."""
-    from openaq_data_pipeline_spark.tmproots import volatile_tmpdir
+    from openaq_data_pipeline_spark.tmproots import session_tmpdir
 
     from openaq_data_pipeline_spark.catalog import normalize_timestamps, prepare_session
     from openaq_data_pipeline_spark.incremental import IncrementalTable, merge_upsert
@@ -2266,13 +2266,7 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    # r17 (VERDICT r16 next #6): the drain's checkpoint + mart are
-    # ephemeral by contract (context-scoped demo state, reaped) — the
-    # many small fsync-y state/commit files go to the volatile
-    # scratch root (tmpfs when present; SPARK_GRAFT_VOLATILE_TMP
-    # parameterizes). A production stream passes its own durable
-    # checkpointLocation instead of this demo drain's temp dir.
-    tmp = volatile_tmpdir("stream_drain_")
+    tmp = session_tmpdir("stream_drain_")
     table = IncrementalTable(
         path=f"{tmp}/mart", unique_key="hour_utc", event_time_col="event_hour"
     )

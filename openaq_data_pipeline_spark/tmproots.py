@@ -44,23 +44,6 @@ import uuid
 
 ROOT_PARENT = os.path.join(tempfile.gettempdir(), "openaq_spark_tmp")
 
-# Volatile scratch parent (r17, VERDICT r16 next #6): state that is
-# EPHEMERAL BY CONTRACT (the bench-scoped streaming drain's
-# checkpoint + sink — context-managed, reaped, never read across
-# process restarts for durability) defaults onto the fastest local
-# storage. Parameterized: ``SPARK_GRAFT_VOLATILE_TMP`` overrides; a
-# production deployment that wants durable streaming checkpoints
-# passes a real checkpoint location to its own stream instead of the
-# demo drain's temp dir, so nothing durable ever lands here.
-_VOLATILE_ENV = os.environ.get("SPARK_GRAFT_VOLATILE_TMP")
-if _VOLATILE_ENV:
-    _VOLATILE_BASE = _VOLATILE_ENV
-elif os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-    _VOLATILE_BASE = "/dev/shm"
-else:
-    _VOLATILE_BASE = tempfile.gettempdir()
-VOLATILE_ROOT_PARENT = os.path.join(_VOLATILE_BASE, "openaq_spark_tmp")
-
 # prefixes the pre-hygiene code mkdtemp'ed straight into /tmp
 LEGACY_PREFIXES = (
     "dedup_index_",
@@ -73,7 +56,6 @@ LEGACY_PREFIXES = (
 LEGACY_MAX_AGE_SEC = 6 * 3600
 
 _session_root: str | None = None
-_volatile_root: str | None = None
 
 
 def _pid_alive(pid: int) -> bool:
@@ -106,27 +88,6 @@ def session_tmpdir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=session_root())
 
 
-def volatile_session_root() -> str:
-    """Like :func:`session_root` but under ``VOLATILE_ROOT_PARENT``
-    (fast local scratch) — same naming scheme, same atexit removal,
-    same pid-liveness reaping."""
-    global _volatile_root
-    if _volatile_root is None or not os.path.isdir(_volatile_root):
-        os.makedirs(VOLATILE_ROOT_PARENT, exist_ok=True)
-        _volatile_root = os.path.join(
-            VOLATILE_ROOT_PARENT, f"{os.getpid()}_{uuid.uuid4().hex[:8]}"
-        )
-        os.makedirs(_volatile_root, exist_ok=True)
-        atexit.register(shutil.rmtree, _volatile_root, ignore_errors=True)
-    return _volatile_root
-
-
-def volatile_tmpdir(prefix: str) -> str:
-    """mkdtemp on the volatile scratch root — for state that is
-    ephemeral by contract (module comment on VOLATILE_ROOT_PARENT)."""
-    return tempfile.mkdtemp(prefix=prefix, dir=volatile_session_root())
-
-
 def reap_stale_roots(now: float | None = None) -> list[str]:
     """Remove session roots owned by dead pids and over-age legacy
     flat-prefix dirs. Returns the paths removed (for tests/logging).
@@ -134,12 +95,9 @@ def reap_stale_roots(now: float | None = None) -> list[str]:
     import time
 
     removed: list[str] = []
-    parents = {ROOT_PARENT, VOLATILE_ROOT_PARENT}
-    for parent in parents:
-        if not os.path.isdir(parent):
-            continue
-        for entry in os.listdir(parent):
-            path = os.path.join(parent, entry)
+    if os.path.isdir(ROOT_PARENT):
+        for entry in os.listdir(ROOT_PARENT):
+            path = os.path.join(ROOT_PARENT, entry)
             pid_part = entry.split("_", 1)[0]
             if not pid_part.isdigit():
                 continue

@@ -2,10 +2,12 @@
 """Supplementary plan captures for queries whose builder ends in
 localCheckpoint(eager=True) (index-building demonstrations): the
 driver-facing explain shows only the checkpoint scan, so this script
-captures the formatted plans of the INTERNAL stages the r16
-optimization touched, into plans/r16/<query>_internal_<suffix>.txt.
+captures the formatted plans of their INTERNAL stages (IVF-PQ
+assignment and encoding, one classifier GD round, trigram LM counts)
+into <outdir>/<stage>_internal_<suffix>.txt.
 
-Usage: python scripts/explain_internals.py <suffix>
+Usage: python scripts/explain_internals.py <outdir> [suffix]
+  e.g. python scripts/explain_internals.py plans/r16 after
 """
 
 from __future__ import annotations
@@ -29,9 +31,10 @@ def explain_str(df) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "after"
-    here = os.path.dirname(os.path.abspath(__file__))
-    outdir = os.path.join(here, "..", "plans", "r16")
+    if len(sys.argv) < 2:
+        sys.exit("usage: python scripts/explain_internals.py <outdir> [suffix]")
+    outdir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "after"
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))

@@ -1,25 +1,10 @@
 """Shared pytest fixtures: one SparkSession per test session, plus
 the OpenAQ-shaped fixture lake and its bronze/transform outputs.
 
-r17 additions (VERDICT r16 next #1/#8):
-
-- **In-process parallel run loop.** A plain ``python -m pytest
-  tests/`` invocation of the FULL suite replaces pytest's serial run
-  loop with concurrent shard subprocesses (``pytest_runtestloop``
-  below): 1098 Spark-heavy tests are latency-bound at ~0.25 s per
-  tiny Spark job (measured, see OPTIMIZATION_r17.md), so one process
-  leaves the box idle and the suite wall blows past the driver's
-  verify window (tests_ok:false at ~877/1098 in VERIFY_r16). Every
-  test still runs, every result is reported through the parent's own
-  terminal reporter (real per-test reports, real exit code) — this is
-  the pytest-xdist topology, in-repo because no third-party plugins
-  can be installed. Small/filtered runs (< OPENAQ_PYTEST_PAR_MIN
-  items), explicit shards, and ``OPENAQ_PYTEST_PARALLEL=0`` keep the
-  stock serial loop.
-- **Parity artifact.** Every ``test_parity[...]`` outcome is merged
-  into ``PARITY_r17.json`` (query -> outcome), so a rotation never
-  again leaves driver-dropped queries without machine-readable
-  correctness evidence (VERDICT r16 next #8).
+Every ``test_parity[...]`` outcome is merged into the parity artifact
+(query -> outcome), so a query rotated out of the gated entry set
+keeps machine-readable correctness evidence. Full-suite runs shard
+themselves through the ``_shard`` plugin.
 """
 
 from __future__ import annotations
@@ -36,11 +21,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from openaq_data_pipeline_spark.session import get_spark  # noqa: E402
 
+pytest_plugins = ["_shard", "pytester"]
+
 _REPO_ROOT = Path(__file__).resolve().parent.parent
 _PARITY_ARTIFACT = os.environ.get(
     "OPENAQ_PARITY_ARTIFACT", str(_REPO_ROOT / "PARITY_r17.json")
 )
-_RESULTS_FILE = os.environ.get("OPENAQ_RESULTS_FILE")
 
 
 def _merge_json_locked(path: str, updates: dict) -> None:
@@ -61,22 +47,15 @@ def _merge_json_locked(path: str, updates: dict) -> None:
 
 
 def pytest_runtest_logreport(report):
-    if report.when != "call":
+    # one entry per oracled query; passing means rows+schema+values
+    # matched the DuckDB oracle exactly (tests/oracle_harness.compare).
+    # Only the parent writes: a shard's reports reach it by replay.
+    # (Imported here, not at the top: importing the plugin before
+    # pytest_plugins registers it would skip its assertion rewriting.)
+    from _shard import RESULTS_ENV
+
+    if report.when != "call" or os.environ.get(RESULTS_ENV):
         return
-    # (a) shard children stream exact per-test results to the parent
-    if _RESULTS_FILE:
-        rec = {
-            "nodeid": report.nodeid,
-            "outcome": report.outcome,
-            "duration": round(report.duration, 3),
-        }
-        if report.outcome == "failed":
-            rec["longrepr"] = str(report.longrepr)[:8000]
-        with open(_RESULTS_FILE, "a") as fh:
-            fh.write(json.dumps(rec) + "\n")
-    # (b) the parity artifact (VERDICT r16 next #8) — one entry per
-    # oracled query; passing means rows+schema+values matched the
-    # DuckDB oracle exactly (tests/oracle_harness.compare)
     if report.nodeid.startswith("tests/test_entry_parity.py::test_parity["):
         qname = report.nodeid.split("[", 1)[1].rstrip("]")
         entry = {
@@ -91,204 +70,18 @@ def pytest_runtest_logreport(report):
             pass  # artifact is best-effort evidence, never a failure
 
 
-def pytest_runtestloop(session):
-    """Parallel run loop for full-suite plain-pytest invocations —
-    see the module docstring. Returning True replaces the default
-    serial loop; returning None keeps it."""
-    cfg = session.config
-    min_items = int(os.environ.get("OPENAQ_PYTEST_PAR_MIN", "200"))
-    if (
-        os.environ.get("OPENAQ_PYTEST_SHARD") == "1"
-        or os.environ.get("OPENAQ_PYTEST_PARALLEL", "1") != "1"
-        or getattr(cfg.option, "collectonly", False)
-        or len(session.items) < min_items
-        or (os.cpu_count() or 1) < 8
-        or session.testsfailed
-    ):
-        return None
-
-    import subprocess
-    import tempfile
-    import time
-
-    import partest  # repo-root runner: packing table + unit collection
-
-    # pack by the measured-durations table (falls back to file size),
-    # at partest's unit granularity: node ids for SPLIT_FILES, whole
-    # files otherwise — a shard rebuilds session fixtures once
-    items_by_unit: dict[str, list] = {}
-    split = tuple(partest.SPLIT_FILES)
-    for it in session.items:
-        fname = it.nodeid.split("::", 1)[0]
-        unit = it.nodeid if fname.endswith(split) else fname
-        items_by_unit.setdefault(unit, []).append(it)
-    n_shards = min(8, max(2, (os.cpu_count() or 8) // 4))
-    shards = partest.pack(
-        sorted(items_by_unit), n_shards, partest.load_durations()
-    )
-
-    tmp = Path(tempfile.mkdtemp(prefix="pytest-par-"))
-    tw = cfg.get_terminal_writer()
-    tw.line(
-        f"parallel run loop: {len(session.items)} tests -> "
-        f"{len(shards)} shard processes (logs in {tmp})"
-    )
-    procs = []
-    for i, units in enumerate(shards):
-        env = dict(os.environ)
-        env["OPENAQ_PYTEST_SHARD"] = "1"
-        env["OPENAQ_RESULTS_FILE"] = str(tmp / f"results-{i}.jsonl")
-        env["SPARK_TEST_WAREHOUSE"] = str(tmp / f"wh-{i}")
-        env.setdefault("PYTHONUNBUFFERED", "1")
-        cmd = [
-            sys.executable, "-m", "pytest", "-q",
-            "-p", "no:cacheprovider", *units,
-        ]
-        out = open(tmp / f"shard-{i}.log", "w")
-        procs.append(
-            (
-                subprocess.Popen(
-                    cmd, stdout=out, stderr=subprocess.STDOUT,
-                    env=env, cwd=str(cfg.rootpath),
-                ),
-                out,
-            )
-        )
-
-    exitfirst = bool(getattr(cfg.option, "exitfirst", False))
-    t0 = time.time()
-    next_note = 30.0
-    failed_seen = False
-    while any(p.poll() is None for p, _ in procs):
-        time.sleep(0.5)
-        if exitfirst and not failed_seen:
-            for i in range(len(procs)):
-                rf = tmp / f"results-{i}.jsonl"
-                if rf.exists() and b'"outcome": "failed"' in rf.read_bytes():
-                    failed_seen = True
-                    for p, _ in procs:
-                        if p.poll() is None:
-                            p.terminate()
-                    break
-        if time.time() - t0 > next_note:
-            done = sum(
-                1
-                for i in range(len(procs))
-                if (tmp / f"results-{i}.jsonl").exists()
-                for _ in open(tmp / f"results-{i}.jsonl")
-            )
-            tw.line(
-                f"parallel run loop: {done}/{len(session.items)} tests "
-                f"finished after {time.time() - t0:.0f}s"
-            )
-            next_note += 30.0
-    for p, out in procs:
-        p.wait()
-        out.close()
-
-    # replay every child result through the parent's own hooks so the
-    # terminal progress, summary counts, session.testsfailed and the
-    # exit code are the real pytest machinery, not a facsimile
-    from _pytest.reports import TestReport
-
-    results: dict[str, dict] = {}
-    for i in range(len(procs)):
-        rf = tmp / f"results-{i}.jsonl"
-        if not rf.exists():
-            continue
-        for line in open(rf):
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            results[rec["nodeid"]] = rec
-    missing = []
-    for it in session.items:
-        rec = results.get(it.nodeid)
-        if rec is None:
-            missing.append(it)
-            continue
-        rep = TestReport(
-            nodeid=it.nodeid,
-            location=it.location,
-            keywords=dict(it.keywords),
-            outcome=rec["outcome"],
-            longrepr=rec.get("longrepr"),
-            when="call",
-            sections=[],
-            duration=rec.get("duration", 0.0),
-        )
-        it.ihook.pytest_runtest_logstart(
-            nodeid=it.nodeid, location=it.location
-        )
-        it.ihook.pytest_runtest_logreport(report=rep)
-        it.ihook.pytest_runtest_logfinish(
-            nodeid=it.nodeid, location=it.location
-        )
-    crashed = [
-        i for i, (p, _) in enumerate(procs) if p.returncode not in (0, 1, 5)
-    ]
-    if missing and not (exitfirst and failed_seen):
-        # a shard died without reporting (e.g. JVM OOM): fail loudly
-        # with the shard tails rather than under-counting silently
-        for it in missing:
-            rep = TestReport(
-                nodeid=it.nodeid,
-                location=it.location,
-                keywords=dict(it.keywords),
-                outcome="failed",
-                longrepr=(
-                    "shard process exited without reporting this test "
-                    f"(crashed shards: {crashed}; logs in {tmp})"
-                ),
-                when="call",
-                sections=[],
-                duration=0.0,
-            )
-            it.ihook.pytest_runtest_logreport(report=rep)
-    # refresh the packing table from the real durations (partest's
-    # convention: per-file sums; node ids for SPLIT_FILES)
-    try:
-        fresh: dict[str, float] = {}
-        for nodeid, rec in results.items():
-            fname = nodeid.split("::", 1)[0]
-            key = nodeid if fname.endswith(split) else fname
-            fresh[key] = round(fresh.get(key, 0.0) + rec["duration"], 2)
-        if fresh:
-            table = partest.load_durations()
-            table.update(fresh)
-            partest.DURATIONS_FILE.write_text(
-                json.dumps(table, indent=1, sort_keys=True)
-            )
-    except OSError:
-        pass
-    return True
-
-
 @pytest.fixture(scope="session")
-def spark():
-    import json
-
-    extra = {
-        "spark.driver.memory": "4g",
-        # partest.py runs shards as concurrent pytest processes;
-        # managed tables (saveAsTable) must not collide across
-        # their in-memory catalogs, so each shard gets its own
-        # warehouse root via this env var
-        "spark.sql.warehouse.dir": os.environ.get(
-            "SPARK_TEST_WAREHOUSE", "/tmp/spark-wh"
-        ),
-    }
-    # ad-hoc conf overrides for suite-latency experiments (r17), e.g.
-    # SPARK_TEST_EXTRA_CONF='{"spark.sql.codegen.wholeStage":"false"}'
-    extra.update(json.loads(os.environ.get("SPARK_TEST_EXTRA_CONF", "{}")))
-    spark = get_spark(
+def spark(tmp_path_factory):
+    return get_spark(
         app_name="openaq-tests",
-        master=os.environ.get("SPARK_TEST_MASTER", "local[4]"),
-        shuffle_partitions=int(os.environ.get("SPARK_TEST_SHUFFLE", "4")),
-        extra_conf=extra,
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={
+            "spark.driver.memory": "4g",
+            # concurrent shard processes must not share managed tables
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("spark-wh")),
+        },
     )
-    yield spark
 
 
 @pytest.fixture(scope="session")
